@@ -1,31 +1,44 @@
-"""``check_data`` — the validation orchestrator (data plane).
+"""``check_data`` and ``check_data_by`` — the validation orchestrator (data plane).
 
 Reference contract: R/check_data.R:52-171 (orchestration), :256-333 (per-rule
 evaluation), :277-287 (negate → allow_na rewrite order), :301-315 (error
 capture), :325 (fail = tests - pass); R/data_column.R:204-275 (schema rows),
 :332-379 (reference rules).
 
-Spark-first design — deliberately NOT the reference's one-scan-per-rule loop:
+One rule-evaluation core, :func:`_evaluate`, serves every API path:
+``check_data`` (no group keys), ``check_data_by`` / ``check_data_by_file`` /
+the ledger (group keys), and the streaming validators (its rule split,
+compile probe and conditional-sum aggregate).  Given the rules, optional group keys
+and the lookup datasets it builds each plan once:
 
-* All expression rules are fused into ONE ``df.agg`` pass: ``count(*)`` plus
-  one conditional sum per rule (plus coercion-watch sums for warn synthesis).
-  N rules ⇒ 1 job, 1 scan — the reference's own batched-describe path
-  (R/describe.R:329-422) pushed to its logical conclusion.  At 100 TB this is
-  the difference between N full-table scans and one.
-* Before launching anything, each rule is resolved against the schema with a
-  zero-row ``df.select`` — analysis errors (missing column, bad call) become
-  error rows (pass=0, fail=tests) without aborting the job, matching
-  R/check_data.R:301-315.
-* Column pruning is left to Catalyst (the fused agg references only rule
-  columns, so the Parquet/Iceberg ReadSchema shrinks to their union — see
-  EXPLAIN.md); an explicit pre-agg select measured strictly slower on cached
-  inputs and was removed.
-* Reference rules evaluate as distinct-ref LEFT joins (AQE picks
-  broadcast-hash when the distinct ref side is small; see ``_eval_reference``)
-  — never a collected ``isin`` list, which would cap ref size at driver memory.
-* ``by=[cols]`` returns a distributed per-group summary (one row per
-  group × rule) via the same fused aggregation under ``groupBy`` — the
-  north_rule's "per-partition pass/fail rows" — without collecting.
+* **Expression rules** — ONE aggregate, grouped by the keys: ``count(*)``
+  plus one conditional sum per rule (plus coercion-watch sums for warn
+  synthesis).  N rules ⇒ 1 job, 1 scan, deliberately NOT the reference's
+  one-scan-per-rule loop — the reference's own batched-describe path
+  (R/describe.R:329-422) pushed to its logical conclusion.  Conditional sums
+  combine map-side, so a key holding 90% of the rows shuffles ONE partial
+  row per upstream task (tested under extreme skew in
+  tests/test_scale_features.py::TestSkew).  Column pruning is left to
+  Catalyst: the aggregate references only rule columns, so the
+  Parquet/Iceberg ReadSchema shrinks to their union (see EXPLAIN.md); an
+  explicit pre-agg select measured 1.7x slower on cached inputs.
+* **Reference rules** — the local column pre-aggregated to
+  ``(keys, value, count)``, LEFT-joined to the distinct ref values (AQE
+  picks broadcast-hash when that side is small), re-aggregated per group.
+  Never a collected ``isin`` list, which would cap ref size at driver memory.
+* **Uniqueness rules** — one key-only ``groupBy(keys + unique_cols)`` count,
+  re-aggregated per group.
+
+Every rule is resolved against the schema before any job runs (one batched
+zero-row analysis, :func:`_analysis_errors`).  A rule that fails to compile
+or analyse — bad call, missing column, missing lookup dataset — becomes an
+error row (pass=0, fail=tests) on every path, matching R/check_data.R:301-315.
+
+``check_data`` collects the plans and adds the driver-side result layer:
+schema rows, error rows, warnings, ``timing`` and the stop gates.
+``check_data_by`` unpivots them (one explode of an array of structs, pure
+Catalyst) to the long form ``keys..., name, expr, tests, pass, fail`` and
+stays distributed.
 """
 
 from __future__ import annotations
@@ -33,14 +46,16 @@ from __future__ import annotations
 import re
 import time as _time
 import warnings
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from functools import reduce
-from operator import or_
+from operator import and_, or_
 from typing import Any, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from . import udf_warnings
 from .expr import CompileResult, ExprError, col_ref, compile_expr, get_called_functions
@@ -105,62 +120,59 @@ def compile_rule_predicate(r: Rule) -> CompileResult:
     return CompileResult(column=pred, symbols=res.symbols, coercion_watchers=res.coercion_watchers)
 
 
-def _compile_all(df: DataFrame, rules: list[Rule]) -> list[_Compiled]:
-    # Probe rules against an EMPTY LocalRelation with the same schema, not
-    # against df itself: analysis cost is proportional to the logical-plan
-    # size, and df may carry an arbitrarily deep plan (unions, joins) that
-    # would be re-analyzed once per rule.  The empty frame has identical
-    # resolution semantics (missing column / type errors) at O(schema) cost.
-    #
-    # r7: the happy path probes ALL compilable rules in ONE select —
-    # aliased probe columns are analyzed independently, so the combined
-    # analysis succeeds iff each per-rule analysis would, and a ruleset of N
-    # valid rules costs one driver analysis roundtrip instead of N (~20 ms
-    # each; the dominant fixed cost of check_data on small/cached inputs).
-    # Only when the batch fails does the per-rule loop run to attribute the
-    # error rows (R/check_data.R:301-315 contract unchanged).
+def _analysis_errors(df: DataFrame, cols: Sequence[Column | Exception]) -> list[str | None]:
+    """Resolve every Column against ``df``'s schema; per entry, ``None`` if
+    it analyses and the error text otherwise (an Exception entry — a
+    compile-time failure — passes straight through as its text).
+
+    The probe is an EMPTY LocalRelation with the same schema, not ``df``
+    itself: analysis cost is proportional to the logical-plan size, and
+    ``df`` may carry an arbitrarily deep plan (unions, joins) that would be
+    re-analyzed per probe.  The empty frame has identical resolution
+    semantics (missing column / type errors) at O(schema) cost.
+
+    All columns are probed in ONE select — aliased columns are analyzed
+    independently, so the batch succeeds iff each one would, and N valid
+    rules cost one driver analysis roundtrip instead of N (~20 ms each; the
+    dominant fixed cost of a check on small/cached inputs).  Only when the
+    batch fails does the per-column loop run to attribute the errors."""
+    errors = [None if isinstance(c, Column) else _strip_error(c) for c in cols]
     probe_df = df.sparkSession.createDataFrame([], df.schema)
-    staged: list[tuple[Rule, Exception | CompileResult]] = []
+    ok = [i for i, c in enumerate(cols) if isinstance(c, Column)]
+    try:
+        if ok:
+            probe_df.select(*[cols[i].alias(f"__probe{i}") for i in ok])
+        return errors
+    except Exception:
+        pass
+    for i in ok:
+        try:
+            probe_df.select(cols[i].alias("__probe"))
+        except Exception as exc:  # AnalysisException, ...
+            errors[i] = _strip_error(exc)
+    return errors
+
+
+def _compile_all(df: DataFrame, rules: list[Rule]) -> list[_Compiled]:
+    staged: list[CompileResult | Exception] = []
     for r in rules:
         try:
-            staged.append((r, compile_rule_predicate(r)))
+            staged.append(compile_rule_predicate(r))
         except Exception as exc:  # ExprError and friends — compile-time
-            staged.append((r, exc))
-
-    compilable = [(i, res) for i, (_, res) in enumerate(staged) if isinstance(res, CompileResult)]
-    batch_ok = False
-    if compilable:
-        try:
-            probe_df.select(
-                *[res.column.alias(f"__probe{i}") for i, res in compilable]
-            )
-            batch_ok = True
-        except Exception:
-            batch_ok = False  # fall through to per-rule attribution
-
-    out: list[_Compiled] = []
-    for i, (r, res) in enumerate(staged):
-        if not isinstance(res, CompileResult):
-            out.append(_Compiled(r, None, [], _strip_error(res)))
-            continue
-        if batch_ok:
-            out.append(_Compiled(r, res.column, res.coercion_watchers, ""))
-            continue
-        try:
-            # force analysis now so missing columns become error rows,
-            # not a failed fused job (R/check_data.R:301-315)
-            probe_df.select(res.column.alias("__probe"))
-            out.append(_Compiled(r, res.column, res.coercion_watchers, ""))
-        except Exception as exc:  # AnalysisException, ...
-            out.append(_Compiled(r, None, [], _strip_error(exc)))
-    return out
+            staged.append(exc)
+    errors = _analysis_errors(df, [s.column if isinstance(s, CompileResult) else s for s in staged])
+    return [
+        _Compiled(r, s.column, s.coercion_watchers, "")
+        if err is None
+        else _Compiled(r, None, [], err)
+        for r, s, err in zip(rules, staged, errors)
+    ]
 
 
 def _safe_alias(columns: Sequence[str], base: str) -> str:
-    """Internal-alias name guaranteed not to shadow a user column (the
-    same prefixing scheme as ``__dvfy_ref_val`` in _reference_ok_column:
-    a dataset with a column literally named ``__cnt`` must not turn a
-    valid uniqueness rule into an AMBIGUOUS_REFERENCE error)."""
+    """Internal-alias name guaranteed not to shadow a user column: a
+    dataset with a column literally named ``__cnt`` must not turn a valid
+    uniqueness rule into an AMBIGUOUS_REFERENCE error."""
     out = base
     while out in columns:
         out = "_" + out
@@ -206,20 +218,30 @@ def _result_row(
 # (R/data_column.R:204-275)
 # ---------------------------------------------------------------------------
 
+_SPARK_INTS = (T.IntegerType, T.LongType, T.ShortType, T.ByteType)
 _SPARK_FAMILY = {
-    "int": (T.IntegerType, T.LongType, T.ShortType, T.ByteType),
-    "double": (
-        T.DoubleType,
-        T.FloatType,
-        T.DecimalType,
-        T.IntegerType,
-        T.LongType,
-        T.ShortType,
-        T.ByteType,
-    ),  # R is.numeric: ints pass as numeric (R/data_column.R:320)
+    "int": _SPARK_INTS,
+    # R is.numeric: ints pass as numeric (R/data_column.R:320)
+    "double": (T.DoubleType, T.FloatType, T.DecimalType, *_SPARK_INTS),
     "string": (T.StringType,),
     "boolean": (T.BooleanType,),
 }
+
+
+def _schema_row(name: str, expr: str, ok: bool, error: str) -> dict[str, Any]:
+    return {
+        "check_type": "schema",
+        "name": name,
+        "expr": expr,
+        "allow_na": False,
+        "negate": False,
+        "tests": 1,
+        "pass": int(ok),
+        "fail": int(not ok),
+        "warn": "",
+        "error": "" if ok else error,
+        "time": 0.0,
+    }
 
 
 def _schema_rows(
@@ -265,197 +287,192 @@ def _schema_rows(
 
     for c in decls:
         exists = c.col in actual
-        ok = exists or c.optional
         rows.append(
-            {
-                "check_type": "schema",
-                "name": f"Column exists: {c.col}",
-                "expr": f"column_exists('{c.col}')",
-                "allow_na": False,
-                "negate": False,
-                "tests": 1,
-                "pass": int(ok),
-                "fail": int(not ok),
-                "warn": "",
-                "error": "" if ok else f"required column '{c.col}' not found",
-                "time": 0.0,
-            }
+            _schema_row(
+                f"Column exists: {c.col}",
+                f"column_exists('{c.col}')",
+                exists or c.optional,
+                f"required column '{c.col}' not found",
+            )
         )
         family = c.spark_type_family()
         if exists and c.type is not None:
             # unknown declared type ⇒ always passes (R/data_column.R:328)
-            ok_t = True if family is None else isinstance(actual[c.col], _SPARK_FAMILY[family])
             rows.append(
-                {
-                    "check_type": "schema",
-                    "name": f"Column type: {c.col}",
-                    "expr": f"column_type('{c.col}') == '{c.type}'",
-                    "allow_na": False,
-                    "negate": False,
-                    "tests": 1,
-                    "pass": int(ok_t),
-                    "fail": int(not ok_t),
-                    "warn": "",
-                    "error": ""
-                    if ok_t
-                    else f"column '{c.col}' has type '{actual[c.col].simpleString()}', declared '{c.type}'",
-                    "time": 0.0,
-                }
+                _schema_row(
+                    f"Column type: {c.col}",
+                    f"column_type('{c.col}') == '{c.type}'",
+                    family is None or isinstance(actual[c.col], _SPARK_FAMILY[family]),
+                    f"column '{c.col}' has type '{actual[c.col].simpleString()}', "
+                    f"declared '{c.type}'",
+                )
             )
     return rows, warns
 
 
 # ---------------------------------------------------------------------------
-# Reference (FK membership) rules — distinct-ref join, AQE-broadcastable
-# (R/data_column.R:332-379)
+# The rule-evaluation core
 # ---------------------------------------------------------------------------
 
 
-def _reference_ok_column(
-    df: DataFrame, r: ReferenceRule, datasets: Mapping[str, DataFrame]
-) -> tuple[DataFrame, Column, str]:
-    """Return (per-distinct-local-value counts joined with hit marker,
-    ok Column, count alias) for one reference rule.
+def _split_rules(rules) -> tuple[list[Rule], list[ReferenceRule], list[UniquenessRule]]:
+    """(expression, reference, uniqueness) rules, each in ruleset order."""
+    ref = [r for r in rules if isinstance(r, ReferenceRule)]
+    uniq = [r for r in rules if isinstance(r, UniquenessRule)]
+    return [r for r in rules if not isinstance(r, (ReferenceRule, UniquenessRule))], ref, uniq
+
+
+def _hit(pred: Column) -> Column:
+    """1 where the predicate holds, else 0 (NULL counts as a fail)."""
+    return F.when(pred, F.lit(1)).otherwise(F.lit(0))
+
+
+def _count_aggs(compiled: list[_Compiled]) -> list[Column]:
+    """``count(*) AS __tests`` plus, for each compiled rule ``i``, its pass
+    count ``__p{i}`` and coercion-watch counts ``__w{i}_{j}``.  Rules with a
+    compile/analysis error get no column (see :func:`_pass_columns`)."""
+    aggs = [F.count(F.lit(1)).alias("__tests")]
+    for i, c in enumerate(compiled):
+        if c.pred is not None:
+            aggs.append(F.sum(_hit(c.pred)).alias(f"__p{i}"))
+            aggs += [F.sum(_hit(w)).alias(f"__w{i}_{j}") for j, w in enumerate(c.watchers)]
+    return aggs
+
+
+def _no_pass() -> Column:
+    return F.lit(0).cast("long")
+
+
+def _pass_columns(compiled: list[_Compiled]) -> list[tuple[str, str, Column]]:
+    """(name, expr, pass column) per rule over a :func:`_count_aggs`
+    aggregate; an error rule passes nothing, so fail = tests."""
+    return [
+        (c.rule.name, c.rule.expr, _no_pass() if c.pred is None else F.col(f"__p{i}"))
+        for i, c in enumerate(compiled)
+    ]
+
+
+def _long_form(
+    agg: DataFrame, keys: Sequence[Column | str], rows: list[tuple[str, str, Column]]
+) -> DataFrame:
+    """Unpivot an aggregate carrying ``__tests`` into one row per (group ×
+    rule): ``keys..., name, expr, tests, pass, fail``.  One explode of an
+    inline array of structs — pure Catalyst, no Python in the row path."""
+    tests = F.col("__tests")
+    structs = [
+        F.struct(
+            F.lit(name).alias("name"),
+            F.lit(expr).alias("expr"),
+            tests.alias("tests"),
+            p.alias("pass"),
+            (tests - p).alias("fail"),
+        )
+        for name, expr, p in rows
+    ]
+    wide = agg.select(*keys, F.explode(F.array(*structs)).alias("__r"))
+    return wide.select(
+        *wide.columns[:-1], "__r.name", "__r.expr", "__r.tests", "__r.pass", "__r.fail"
+    )
+
+
+def _any_null(cols: Sequence[str]) -> Column:
+    return reduce(or_, [F.col(c).isNull() for c in cols])
+
+
+def _group_pass(
+    counted: DataFrame, keys: list[str], r: Rule, ok: Column, na: Column, cnt: str
+) -> DataFrame:
+    """Re-aggregate per-(group, value) counts to ``keys..., __tests, __pass``.
+    Flag order of the aggregation-shaped rules is the OPPOSITE of expression
+    rules: allow_na rescues the ``na`` rows FIRST and negate applies LAST
+    (R/data_column.R:353-358), so with both flags set a NULL value is
+    rescued to ok=TRUE and then negated to a FAIL."""
+    if r.allow_na:
+        ok = ok | na
+    if r.negate:
+        ok = ~ok
+    return counted.groupBy(*keys).agg(
+        F.sum(F.col(cnt)).alias("__tests"),
+        F.sum(F.when(ok, F.col(cnt)).otherwise(F.lit(0))).alias("__pass"),
+    )
+
+
+def _reference_plan(
+    df: DataFrame, r: ReferenceRule, keys: list[str], datasets: Mapping[str, DataFrame]
+) -> DataFrame:
+    """Per-group membership counts for one reference rule.
 
     R ``%in%`` never yields NA: NULL local ⇒ FALSE (R/data_column.R:352), so
-    ``hit IS NOT NULL`` reproduces it exactly.  Rewrite order is the OPPOSITE
-    of expression rules here: the reference applies the allow_na is-na rescue
-    FIRST and negate LAST (R/data_column.R:353-358), so with both flags set a
-    NULL local value is rescued to ok=TRUE and then negated to a FAIL.
+    ``hit IS NOT NULL`` reproduces it exactly; allow_na rescues NULL local
+    values (flag order in :func:`_group_pass`).
 
     r7 (guide §2.3 "aggregate before you shuffle"): the local side is
-    pre-aggregated to ``(value, count)`` BEFORE the membership join.  Every
-    row's verdict depends only on its value, so the join needs one row per
-    DISTINCT local value, not one per data row; partial aggregation combines
-    duplicates (including a hyper-hot FK value) map-side, the shuffle and
-    join carry |distinct| rows, and skew vanishes without AQE's help — the
-    10^12-row orders-table check joins ~|customers| rows.  A NULL local
-    value groups like any other value (count preserved) and still reads as
-    a non-hit.
-    """
+    projected to the keys + the local column ONLY (payload never joins) and
+    pre-aggregated to ``(keys, value, count)`` BEFORE the membership join.
+    Every row's verdict depends only on its value, so the join needs one row
+    per DISTINCT (group, value), not one per data row; partial aggregation
+    combines duplicates (including a hyper-hot FK value) map-side, and skew
+    vanishes without AQE's help.  A NULL local value groups like any other
+    value (count preserved) and still reads as a non-hit."""
+    if r.ref_dataset not in datasets:
+        raise ValueError(f"reference dataset '{r.ref_dataset}' not provided")
     ref = datasets[r.ref_dataset]
     if r.ref_col not in ref.columns:
         raise ValueError(f"reference column '{r.ref_col}' not in dataset '{r.ref_dataset}'")
-    # collision-proof alias: a local column literally named __ref_val must not
-    # shadow the hit marker (same scheme as the check_data_by path below)
-    ref_alias = "__dvfy_ref_val"
-    while ref_alias in df.columns:
-        ref_alias = "_" + ref_alias
+    hit = _safe_alias(df.columns, "__dvfy_ref_val")
     cnt = _safe_alias(df.columns, "__cnt")
-    ref_vals = ref.select(F.col(r.ref_col).alias(ref_alias)).distinct()
-    # project df to the local column ONLY, then count per distinct value:
-    # membership counting needs nothing else, and at 10^12 rows neither the
-    # payload nor the data rows themselves may enter the join
-    local = df.select(F.col(r.local_col)).groupBy(r.local_col).agg(
-        F.count(F.lit(1)).alias(cnt)
-    )
-    joined = local.join(ref_vals, local[r.local_col] == F.col(ref_alias), "left")
-    ok = F.col(ref_alias).isNotNull()
-    if r.allow_na:
-        ok = ok | F.col(r.local_col).isNull()
-    if r.negate:
-        ok = ~ok
-    return joined, ok, cnt
+    # the FK column may itself be a group key: project it once
+    proj = keys + ([r.local_col] if r.local_col not in keys else [])
+    local = df.select(*proj).groupBy(*proj).agg(F.count(F.lit(1)).alias(cnt))
+    ref_vals = ref.select(F.col(r.ref_col).alias(hit)).distinct()
+    joined = local.join(ref_vals, local[r.local_col] == F.col(hit), "left")
+    return _group_pass(joined, keys, r, F.col(hit).isNotNull(), F.col(r.local_col).isNull(), cnt)
 
 
-def _eval_uniqueness(df: DataFrame, r: "UniquenessRule", tests: int) -> dict[str, Any]:
-    """One key-only groupBy job: tests = Σ group counts, pass = rows in
-    singleton groups.  The projection ships ONLY the key columns into the
-    shuffle (at 10^12 rows the audio payload never moves); partial
-    aggregation combines duplicate keys map-side, and the second agg is a
-    single-row reduce.  allow_na rescues NULL-key rows FIRST, negate LAST
-    (the reference-rule flag order)."""
-    t0 = _time.perf_counter()
-    try:
-        missing = [c for c in r.unique_cols if c not in df.columns]
-        if missing:
-            raise ValueError(f"column(s) {missing} not in dataset")
-        keys = [F.col(c) for c in r.unique_cols]
-        cnt = _safe_alias(df.columns, "__cnt")
-        isn = _safe_alias(df.columns, "__isnull")
-        null_key = None
-        for c in r.unique_cols:
-            cond = F.col(c).isNull()
-            null_key = cond if null_key is None else (null_key | cond)
-        grouped = df.groupBy(*keys).agg(
-            F.count(F.lit(1)).alias(cnt),
-            F.max(null_key.cast("int")).alias(isn),
-        )
-        ok = F.col(cnt) == 1
-        if r.allow_na:
-            ok = ok | (F.col(isn) == 1)
-        if r.negate:
-            ok = ~ok
-        row = grouped.agg(
-            F.sum(F.when(ok, F.col(cnt)).otherwise(F.lit(0))).alias("p")
-        ).collect()[0]
-        return _result_row(r, tests, int(row["p"] or 0), elapsed=_time.perf_counter() - t0)
-    except Exception as exc:
-        return _result_row(r, tests, 0, error=_strip_error(exc), elapsed=_time.perf_counter() - t0)
-
-
-def uniqueness_violations(df: DataFrame, r: "UniquenessRule") -> DataFrame:
-    """Rows of ``df`` violating a uniqueness rule — the filter_fails
-    complement (filter_fails itself skips aggregation rules the way the
-    reference skips reference rules, R/filters.R:42-47).  A left-semi join
-    against the duplicated key set; only keys shuffle."""
-    from functools import reduce as _reduce
-    from operator import and_ as _and
-
-    keys = list(r.unique_cols)
-    null_key = None
-    for c in keys:
-        cond = F.col(c).isNull()
-        null_key = cond if null_key is None else (null_key | cond)
-    # allow_na rescues NULL-key rows FIRST: they leave the candidate pool
-    # (and re-enter wholesale as violators under negation, flag order per
-    # R/data_column.R:353-358)
-    base = df.filter(~null_key) if r.allow_na else df
+def _uniqueness_plan(df: DataFrame, r: UniquenessRule, keys: list[str]) -> DataFrame:
+    """Per-group uniqueness counts: tests = Σ key-group counts, pass = rows
+    in singleton key groups.  The projection ships ONLY the group and key
+    columns into the shuffle (at 10^12 rows the audio payload never moves);
+    partial aggregation combines duplicate keys map-side.  NULL keys group
+    together (SQL GROUP BY); allow_na rescues rows with a NULL key column."""
+    missing = [c for c in r.unique_cols if c not in df.columns]
+    if missing:
+        raise ValueError(f"column(s) {missing} not in dataset")
     cnt = _safe_alias(df.columns, "__cnt")
-    bk = "__bk"
-    while any(f"{bk}_{c}" in df.columns for c in keys):
-        bk = "_" + bk
-    grouped = base.groupBy(*[F.col(c) for c in keys]).agg(
-        F.count(F.lit(1)).alias(cnt)
-    )
-    bad = F.col(cnt) > 1
-    if r.negate:
-        bad = ~bad  # singleton keys become the violators
-    bad_keys = grouped.filter(bad).select(
-        *[F.col(c).alias(f"{bk}_{c}") for c in keys]
-    )
-    # null-SAFE semi join: without allow_na a duplicated NULL-key group must
-    # still surface (SQL GROUP BY groups NULLs together; a plain equi-join
-    # would silently drop them)
-    join_cond = _reduce(_and, [base[c].eqNullSafe(bad_keys[f"{bk}_{c}"]) for c in keys])
-    out = base.join(bad_keys, join_cond, "left_semi")
-    if r.allow_na and r.negate:
-        out = out.unionByName(df.filter(null_key))
-    return out
+    cols = keys + [c for c in r.unique_cols if c not in keys]
+    grouped = df.select(*cols).groupBy(*cols).agg(F.count(F.lit(1)).alias(cnt))
+    return _group_pass(grouped, keys, r, F.col(cnt) == 1, _any_null(r.unique_cols), cnt)
 
 
-def _eval_reference(
-    df: DataFrame, r: ReferenceRule, datasets: Mapping[str, DataFrame], tests: int
-) -> dict[str, Any]:
-    t0 = _time.perf_counter()
-    if r.ref_dataset not in datasets:
-        return _result_row(
-            r,
-            tests,
-            0,
-            error=f"reference dataset '{r.ref_dataset}' not provided",
-            elapsed=_time.perf_counter() - t0,
-        )
-    try:
-        joined, ok, cnt = _reference_ok_column(df, r, datasets)
-        passed = joined.agg(
-            F.sum(F.when(ok, F.col(cnt)).otherwise(F.lit(0))).alias("p")
-        ).collect()[0]["p"]
-        return _result_row(r, tests, int(passed or 0), elapsed=_time.perf_counter() - t0)
-    except Exception as exc:
-        # missing local column, analysis errors, etc. — error row, never throw
-        # (R/check_data.R:301-315 contract applies to reference rules too)
-        return _result_row(r, tests, 0, error=_strip_error(exc), elapsed=_time.perf_counter() - t0)
+@dataclass
+class _Plans:
+    compiled: list[_Compiled]  # expression rules, ruleset order
+    main: DataFrame  # keys..., __tests, __p{i}, __w{i}_{j}
+    # reference then uniqueness rules: (rule, keys/__tests/__pass plan, error)
+    side: list[tuple[Rule, DataFrame | None, str]]
+
+
+def _evaluate(
+    df: DataFrame,
+    rules: Ruleset,
+    keys: list[str] | None = None,
+    datasets: Mapping[str, DataFrame] | None = None,
+) -> _Plans:
+    """Build (lazily — no job runs here) every plan a ruleset needs over
+    ``df`` grouped by ``keys`` (none ⇒ one global group)."""
+    keys = keys or []
+    expr_rules, ref_rules, uniq_rules = _split_rules(rules)
+    compiled = _compile_all(df, expr_rules)
+    side: list[tuple[Rule, DataFrame | None, str]] = []
+    for r in ref_rules + uniq_rules:
+        try:
+            if isinstance(r, ReferenceRule):
+                side.append((r, _reference_plan(df, r, keys, datasets or {}), ""))
+            else:
+                side.append((r, _uniqueness_plan(df, r, keys), ""))
+        except Exception as exc:  # missing column / dataset — error row
+            side.append((r, None, _strip_error(exc)))
+    return _Plans(compiled, df.groupBy(*keys).agg(*_count_aggs(compiled)), side)
 
 
 # ---------------------------------------------------------------------------
@@ -510,6 +527,36 @@ def _resolve_datasets(
     raise TypeError(f"x must be a DataFrame or mapping of DataFrames, got {type(x).__name__}")
 
 
+def _side_row(r: Rule, plan: DataFrame | None, error: str, tests: int) -> dict[str, Any]:
+    """Result row of one reference/uniqueness rule: its own key-only job;
+    a failure at plan or run time becomes an error row, never a throw
+    (R/check_data.R:301-315 applies to these rules too)."""
+    if plan is None:
+        return _result_row(r, tests, 0, error=error)
+    t0 = _time.perf_counter()
+    try:
+        passed = plan.collect()[0]["__pass"]
+        return _result_row(r, tests, int(passed or 0), elapsed=_time.perf_counter() - t0)
+    except Exception as exc:
+        return _result_row(r, tests, 0, error=_strip_error(exc), elapsed=_time.perf_counter() - t0)
+
+
+def _rule_warns(c: _Compiled, i: int, agg_row: dict, fn_warns: dict[str, list[str]]) -> str:
+    warns: list[str] = []
+    if any(int(agg_row[f"__w{i}_{j}"] or 0) > 0 for j in range(len(c.watchers))):
+        warns.append(_COERCION_WARN)
+    if fn_warns:
+        try:
+            called = get_called_functions(c.rule.expr)
+        except ExprError:
+            called = []
+        for fn in called:
+            warns.extend(m for m in fn_warns.get(fn, ()) if m not in warns)
+    # unique messages joined with ", " exactly like the reference's
+    # get_warnings (R/check_data.R: paste(unique(out), collapse = ", "))
+    return ", ".join(warns)
+
+
 def check_data(
     x: DataFrame | Mapping[str, DataFrame],
     rules: Ruleset | Rule | str,
@@ -526,7 +573,7 @@ def check_data(
     """Run a ruleset against a dataset; return the 11-column summary DataFrame.
 
     Row-order contract (R/check_data.R:127-144): schema rows first, then
-    row_rules in ruleset order, then reference rules.
+    row_rules in ruleset order, then reference rules, then uniqueness rules.
 
     ``timing`` semantics for the ``time`` column: the reference evaluates one
     scan per rule, so its per-rule times are real; this engine fuses all
@@ -539,6 +586,8 @@ def check_data(
       timed in its own single-rule aggregation job and that wall time is
       reported — reference-comparable numbers, at the cost of N extra scans
       (use for profiling, never in production pipelines).
+
+    Reference and uniqueness rules always report their own job's wall time.
     """
     if isinstance(rules, str):
         from .io import read_rules
@@ -562,40 +611,20 @@ def check_data(
         for msg in schema_warns:
             warnings.warn(msg, stacklevel=2)
 
-    expr_rules = [r for r in rules if not isinstance(r, (ReferenceRule, UniquenessRule))]
-    ref_rules = [r for r in rules if isinstance(r, ReferenceRule)]
-    uniq_rules = [r for r in rules if isinstance(r, UniquenessRule)]
-
-    compiled = _compile_all(df, expr_rules)
-    good = [c for c in compiled if c.pred is not None]
-
-    # no explicit column-pruning select: Catalyst prunes the scan (parquet
-    # ReadSchema / InMemoryTableScan) to the union of referenced columns on
-    # its own, and an extra select only adds an analysis pass (measured 1.7x
-    # slower — on CACHED inputs, where analysis overhead dominates; on cold
-    # parquet the select is merely redundant, Catalyst prunes either way)
-    scan_df = df
+    plans = _evaluate(df, rules, datasets=datasets)
+    good = [i for i, c in enumerate(plans.compiled) if c.pred is not None]
 
     t0 = _time.perf_counter()
-    aggs: list[Column] = [F.count(F.lit(1)).alias("__tests")]
-    for i, c in enumerate(good):
-        aggs.append(F.sum(F.when(c.pred, F.lit(1)).otherwise(F.lit(0))).alias(f"__p{i}"))
-        for j, w in enumerate(c.watchers):
-            aggs.append(F.sum(F.when(w, F.lit(1)).otherwise(F.lit(0))).alias(f"__w{i}_{j}"))
     warn_before = udf_warnings.snapshot()
-    if good or expr_rules or ref_rules:
-        agg_row = scan_df.agg(*aggs).collect()[0].asDict()
-    else:
-        agg_row = {"__tests": df.count()}
+    agg_row = plans.main.collect()[0].asDict()
     tests = int(agg_row["__tests"])
-    scan_elapsed = _time.perf_counter() - t0
-    per_rule_time = scan_elapsed / max(len(good), 1)
+    per_rule_time = (_time.perf_counter() - t0) / max(len(good), 1)
 
     rule_times: dict[int, float] = {}
     if timing == "per_rule":
-        for i, c in enumerate(good):
+        for i in good:
             t1 = _time.perf_counter()
-            scan_df.agg(F.sum(F.when(c.pred, F.lit(1)).otherwise(F.lit(0)))).collect()
+            df.agg(*_count_aggs([plans.compiled[i]])).collect()
             rule_times[i] = _time.perf_counter() - t1
 
     # executor-side warnings raised inside UDF batches during THIS job,
@@ -605,66 +634,32 @@ def check_data(
     for fn, msg in sorted(udf_warnings.new_since(warn_before)):
         fn_warns.setdefault(fn, []).append(msg)
 
-    row_results: list[dict[str, Any]] = []
-    gi = 0
-    for c in compiled:
-        if c.pred is None:
-            # error row: pass=0, fail=tests (R/check_data.R:301-315)
-            row_results.append(_result_row(c.rule, tests, 0, error=c.error, elapsed=0.0))
-        else:
-            passed = int(agg_row[f"__p{gi}"] or 0)
-            warns: list[str] = []
-            if c.watchers and any(
-                int(agg_row[f"__w{gi}_{j}"] or 0) > 0 for j in range(len(c.watchers))
-            ):
-                warns.append(_COERCION_WARN)
-            if fn_warns:
-                try:
-                    called = get_called_functions(c.rule.expr)
-                except ExprError:
-                    called = []
-                for fn in called:
-                    warns.extend(m for m in fn_warns.get(fn, ()) if m not in warns)
-            row_results.append(
-                _result_row(
-                    c.rule,
-                    tests,
-                    passed,
-                    # unique messages joined with ", " exactly like the
-                    # reference's get_warnings (R/check_data.R:
-                    # paste(unique(out), collapse = ", "))
-                    warn=", ".join(warns),
-                    elapsed=rule_times.get(gi, per_rule_time),
-                )
+    row_results = [
+        # error row: pass=0, fail=tests (R/check_data.R:301-315)
+        _result_row(c.rule, tests, 0, error=c.error)
+        if c.pred is None
+        else _result_row(
+            c.rule,
+            tests,
+            int(agg_row[f"__p{i}"] or 0),
+            warn=_rule_warns(c, i, agg_row, fn_warns),
+            elapsed=rule_times.get(i, per_rule_time),
+        )
+        for i, c in enumerate(plans.compiled)
+    ]
+
+    # reference and uniqueness rules are independent key-only jobs — submit
+    # them concurrently (Spark's scheduler interleaves jobs from driver
+    # threads; the threads inherit the caller's job tags and group); result
+    # rows still follow ruleset order
+    with ThreadPoolExecutor(max_workers=min(4, len(plans.side)) or 1) as pool:
+        side_rows = list(
+            pool.map(
+                inheritable_thread_target(spark)(lambda s: _side_row(*s, tests)), plans.side
             )
-            gi += 1
+        )
 
-    # reference rules are independent join+agg jobs — submit them concurrently
-    # (Spark's scheduler interleaves jobs from multiple driver threads); order
-    # of the result rows still follows ruleset order
-    if len(ref_rules) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(4, len(ref_rules))) as pool:
-            ref_results = list(
-                pool.map(lambda r: _eval_reference(df, r, datasets, tests), ref_rules)
-            )
-    else:
-        ref_results = [_eval_reference(df, r, datasets, tests) for r in ref_rules]
-
-    # uniqueness rules are independent groupBy jobs — same concurrent driver
-    # submission as reference rules (scheduler interleaves; row order kept)
-    if len(uniq_rules) > 1:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=min(4, len(uniq_rules))) as pool:
-            uniq_results = list(
-                pool.map(lambda r: _eval_uniqueness(df, r, tests), uniq_rules)
-            )
-    else:
-        uniq_results = [_eval_uniqueness(df, r, tests) for r in uniq_rules]
-
-    all_rows = schema_rows + row_results + ref_results + uniq_results
+    all_rows = schema_rows + row_results + side_rows
     result = _local_result_df(
         spark,
         [tuple(r[f.name] for f in RESULT_SCHEMA.fields) for r in all_rows],
@@ -727,164 +722,50 @@ def check_data_by(
     by: list[str] | str,
     datasets: Mapping[str, DataFrame] | None = None,
 ) -> DataFrame:
-    """Per-group pass/fail summary — stays distributed (no collect).
+    """Per-group pass/fail summary in long form ``by..., name, expr, tests,
+    pass, fail`` — stays distributed (no collect).  At 10^12 rows this
+    yields one summary row per (partition-key × rule), the north_rule shape.
 
-    Reference (FK) rules are supported when ``datasets`` supplies the lookup
-    tables: each becomes ONE key-only projection → distinct-ref left join →
-    the same groupBy aggregation (payload bytes never join), and its rows
-    union after the expression-rule rows.  Without ``datasets`` a ruleset
-    containing reference rules raises instead of silently dropping them.
+    Runs the same core as :func:`check_data`, grouped by ``by``: ONE
+    ``groupBy(by).agg`` computes every expression rule's conditional sum
+    per group in a single shuffle; each reference rule is a key-only
+    pre-aggregate → distinct-ref left join, each uniqueness rule a key-only
+    ``groupBy(by + keys)`` count.  Summed over groups, tests/pass/fail equal
+    ``check_data``'s (for a uniqueness rule: when no duplicate key spans
+    two groups — uniqueness is judged within each group).
 
-    One ``groupBy(by).agg`` computes every rule's conditional sum per group in
-    a single shuffle; results are unpivoted to long form
-    ``by..., name, expr, tests, pass, fail`` via an inline array-of-structs
-    (pure Catalyst — no Python in the row path).  At 10^12 rows this yields
-    one summary row per (partition-key × rule), the north_rule shape.
+    Error rows match ``check_data``: a rule that fails to compile or
+    analyse (missing column, bad call, missing lookup dataset) gets pass=0
+    and fail=tests in every group.  Reference rules need ``datasets``
+    (the lookup tables by name); without it a ruleset containing reference
+    rules raises — a caller error, not a data error.
 
     Skew note (north_rule: hot clip_id partitions): conditional-sum
-    aggregates combine map-side, so a key holding 90% of the rows shuffles
-    ONE partial row per upstream task, not 90% of the data to one reducer —
-    no salting needed for the summary path (tested under extreme skew in
-    tests/test_scale_features.py::TestSkew).  Salting matters for DISTINCT
-    counting (operators/uniqueness.py) and joins (AQE skewJoin enabled in
-    session.build_spark), not for these sums.
+    aggregates combine map-side, so no salting is needed for the summary
+    path.  Salting matters for DISTINCT counting (operators/uniqueness.py)
+    and joins (AQE skewJoin enabled in session.build_spark), not for these
+    sums.
     """
     if isinstance(rules, Rule):
         rules = ruleset(rules)
-    by_cols = [by] if isinstance(by, str) else list(by)
-
-    ref_rules = [r for r in rules if isinstance(r, ReferenceRule)]
-    if ref_rules and datasets is None:
+    keys = [by] if isinstance(by, str) else list(by)
+    if datasets is None and any(isinstance(r, ReferenceRule) for r in rules):
         raise ValueError(
             "ruleset contains reference rules; pass datasets={'name': ref_df, ...} "
             "to check_data_by (they would otherwise be silently dropped)"
         )
-    uniq_rules = [r for r in rules if isinstance(r, UniquenessRule)]
-    expr_rules = [
-        r for r in rules if not isinstance(r, (ReferenceRule, UniquenessRule))
+    plans = _evaluate(df, rules, keys, datasets)
+    rows = _pass_columns(plans.compiled)
+    rows += [(r.name, r.expr, _no_pass()) for r, plan, _ in plans.side if plan is None]
+    parts = [_long_form(plans.main, keys, rows)] if rows else []
+    parts += [
+        _long_form(plan, keys, [(r.name, r.expr, F.col("__pass"))])
+        for r, plan, _ in plans.side
+        if plan is not None
     ]
-
-    out: DataFrame | None = None
-    if expr_rules:
-        compiled = _compile_all(df, expr_rules)
-        good = [c for c in compiled if c.pred is not None]
-        if not good:
-            raise ValueError("no compilable rules for check_data_by")
-
-        aggs: list[Column] = [F.count(F.lit(1)).alias("__tests")]
-        for i, c in enumerate(good):
-            aggs.append(F.sum(F.when(c.pred, F.lit(1)).otherwise(F.lit(0))).alias(f"__p{i}"))
-        grouped = df.groupBy(*[F.col(c) for c in by_cols]).agg(*aggs)
-
-        structs = [
-            F.struct(
-                F.lit(c.rule.name).alias("name"),
-                F.lit(c.rule.expr).alias("expr"),
-                F.col("__tests").alias("tests"),
-                F.col(f"__p{i}").alias("pass"),
-                (F.col("__tests") - F.col(f"__p{i}")).alias("fail"),
-            )
-            for i, c in enumerate(good)
-        ]
-        out = (
-            grouped.select(*by_cols, F.explode(F.array(*structs)).alias("__r"))
-            .select(*by_cols, "__r.name", "__r.expr", "__r.tests", "__r.pass", "__r.fail")
-        )
-
-    for r in ref_rules:
-        if r.ref_dataset not in datasets:
-            raise ValueError(f"reference dataset '{r.ref_dataset}' not provided")
-        # collision-proof alias: never shadowed by a user column of the same
-        # name, and unique even when the FK column is itself a by column
-        ref_alias = "__dvfy_ref_val"
-        while ref_alias in df.columns:
-            ref_alias = "_" + ref_alias
-        ref_vals = (
-            datasets[r.ref_dataset].select(F.col(r.ref_col).alias(ref_alias)).distinct()
-        )
-        # key-only projection: by columns + the FK column (deduped — the FK
-        # may itself be a by column); payload never joins.  r7: pre-aggregate
-        # to (group, value, count) BEFORE the membership join (guide §2.3) —
-        # the join carries one row per distinct (group × FK value), partial
-        # aggregation absorbs hot keys map-side, and the per-group sums
-        # reconstruct exact tests/pass from the counts.
-        proj = list(by_cols) + ([r.local_col] if r.local_col not in by_cols else [])
-        cnt = _safe_alias(df.columns, "__cnt")
-        local = (
-            df.select(*[F.col(c) for c in proj])
-            .groupBy(*proj)
-            .agg(F.count(F.lit(1)).alias(cnt))
-        )
-        joined = local.join(ref_vals, local[r.local_col] == F.col(ref_alias), "left")
-        ok = F.col(ref_alias).isNotNull()
-        if r.allow_na:  # rescue FIRST, negate LAST (R/data_column.R:353-358)
-            ok = ok | F.col(r.local_col).isNull()
-        if r.negate:
-            ok = ~ok
-        rows = (
-            joined.groupBy(*[F.col(c) for c in by_cols])
-            .agg(
-                F.sum(F.col(cnt)).alias("tests"),
-                F.sum(F.when(ok, F.col(cnt)).otherwise(F.lit(0))).alias("pass"),
-            )
-            .select(
-                *by_cols,
-                F.lit(r.name).alias("name"),
-                F.lit(r.expr).alias("expr"),
-                "tests",
-                "pass",
-                (F.col("tests") - F.col("pass")).alias("fail"),
-            )
-        )
-        out = rows if out is None else out.unionByName(rows)
-
-    for r in uniq_rules:
-        # per-group uniqueness: ONE groupBy(by + keys) count, re-aggregated
-        # per group — keys-only projection, payload never shuffles.  Missing
-        # key columns raise (the _by contract has no error-row channel).
-        missing = [c for c in r.unique_cols if c not in df.columns]
-        if missing:
-            raise ValueError(f"uniqueness rule '{r.name}': column(s) {missing} not in DataFrame")
-        key_cols = [c for c in r.unique_cols if c not in by_cols]
-        cnt = _safe_alias(df.columns, "__cnt")
-        isn = _safe_alias(df.columns, "__isnull")
-        null_key = None
-        for c in r.unique_cols:
-            cond = F.col(c).isNull()
-            null_key = cond if null_key is None else (null_key | cond)
-        grouped = (
-            df.select(*[F.col(c) for c in by_cols + key_cols])
-            .groupBy(*[F.col(c) for c in by_cols + list(r.unique_cols)])
-            .agg(
-                F.count(F.lit(1)).alias(cnt),
-                F.max(null_key.cast("int")).alias(isn),
-            )
-        )
-        ok = F.col(cnt) == 1
-        if r.allow_na:
-            ok = ok | (F.col(isn) == 1)
-        if r.negate:
-            ok = ~ok
-        rows = (
-            grouped.groupBy(*[F.col(c) for c in by_cols])
-            .agg(
-                F.sum(F.col(cnt)).alias("tests"),
-                F.sum(F.when(ok, F.col(cnt)).otherwise(F.lit(0))).alias("pass"),
-            )
-            .select(
-                *by_cols,
-                F.lit(r.name).alias("name"),
-                F.lit(r.expr).alias("expr"),
-                "tests",
-                "pass",
-                (F.col("tests") - F.col("pass")).alias("fail"),
-            )
-        )
-        out = rows if out is None else out.unionByName(rows)
-
-    if out is None:
-        raise ValueError("no compilable rules for check_data_by")
-    return out
+    if not parts:
+        raise ValueError("no rules for check_data_by")
+    return reduce(DataFrame.unionByName, parts)
 
 
 def check_data_by_file(
@@ -961,18 +842,39 @@ def stamp_file_col(df: DataFrame, file_col: str, basename: bool, caller: str) ->
     return df.withColumn(file_col, src)
 
 
-def combined_fail_predicate(rules: Ruleset) -> Column:
-    """OR of all per-rule failure predicates — one scan finds every violator."""
-    from .filters import fail_predicate
+# ---------------------------------------------------------------------------
+# Violation rows of the aggregation-shaped rules (filter_fails skips them the
+# way the reference skips reference rules, R/filters.R:42-47)
+# ---------------------------------------------------------------------------
 
-    preds = [
-        fail_predicate(r)
-        for r in rules
-        if not isinstance(r, (ReferenceRule, UniquenessRule))
-    ]
-    if not preds:
-        return F.lit(False)
-    return reduce(or_, preds)
+
+def uniqueness_violations(df: DataFrame, r: "UniquenessRule") -> DataFrame:
+    """Rows of ``df`` violating a uniqueness rule — the filter_fails
+    complement.  A left-semi join against the duplicated key set; only keys
+    shuffle."""
+    keys = list(r.unique_cols)
+    null_key = _any_null(keys)
+    # allow_na rescues NULL-key rows FIRST: they leave the candidate pool
+    # (and re-enter wholesale as violators under negation, flag order per
+    # R/data_column.R:353-358)
+    base = df.filter(~null_key) if r.allow_na else df
+    cnt = _safe_alias(df.columns, "__cnt")
+    bk = {c: _safe_alias(df.columns, f"__bk_{c}") for c in keys}
+    grouped = base.groupBy(*[F.col(c) for c in keys]).agg(
+        F.count(F.lit(1)).alias(cnt)
+    )
+    bad = F.col(cnt) > 1
+    if r.negate:
+        bad = ~bad  # singleton keys become the violators
+    bad_keys = grouped.filter(bad).select(*[F.col(c).alias(bk[c]) for c in keys])
+    # null-SAFE semi join: without allow_na a duplicated NULL-key group must
+    # still surface (SQL GROUP BY groups NULLs together; a plain equi-join
+    # would silently drop them)
+    join_cond = reduce(and_, [base[c].eqNullSafe(bad_keys[bk[c]]) for c in keys])
+    out = base.join(bad_keys, join_cond, "left_semi")
+    if r.allow_na and r.negate:
+        out = out.unionByName(df.filter(null_key))
+    return out
 
 
 def reference_violations(

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .check import _analysis_errors
 from .expr import col_ref
 from .rules import ReferenceRule, Rule, Ruleset, UniquenessRule
 
@@ -84,31 +85,16 @@ def filter_fails(
     several rules (R/filters.R:89).  ``tag=True`` adds a ``failed_rule``
     column (scale extension: write straight to a violations table).
     """
-    rules = _rules_from_result(res)
-    # schema-only probe frame: rule analysis cost must not scale with x's plan
-    probe_df = x.sparkSession.createDataFrame([], x.schema)
-    staged: list[tuple[Rule, Column]] = []
-    for r in rules:
+    staged: list[tuple[Rule, Column | Exception]] = []
+    for r in _rules_from_result(res):
         try:
             staged.append((r, fail_predicate(r)))
-        except Exception:
-            continue  # compile-time failure (ExprError)
-    # r7: one batched analysis for the happy path (aliased probe columns
-    # resolve independently — same contract, one driver roundtrip instead
-    # of N); fall back to per-rule attribution only when the batch fails
-    usable: list[tuple[Rule, Column]] = []
-    try:
-        probe_df.select(*[p.alias(f"__probe{i}") for i, (_, p) in enumerate(staged)])
-        usable = staged
-    except Exception:
-        for r, pred in staged:
-            try:
-                probe_df.select(pred.alias("__probe"))  # force analysis now
-                usable.append((r, pred))
-            except Exception:
-                # uncompilable rule (e.g. missing column) cannot identify
-                # violation rows; check_data already reported it as an error row
-                continue
+        except Exception as exc:  # compile-time failure (ExprError)
+            staged.append((r, exc))
+    # an unusable rule (e.g. missing column) cannot identify violation rows;
+    # check_data already reports it as an error row
+    errors = _analysis_errors(x, [p for _, p in staged])
+    usable = [rp for rp, err in zip(staged, errors) if err is None]
 
     if per_rule:
         out: dict[str, DataFrame] = {}

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import time
 import uuid
+from typing import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -82,8 +83,14 @@ class ValidationLedger:
         rules: Ruleset | Rule,
         part_col: str,
         run_id: str | None = None,
+        datasets: Mapping[str, DataFrame] | None = None,
     ) -> str:
         """Validate only pending partitions; append their per-partition rows.
+
+        ``datasets`` holds the lookup tables of reference rules by name, as
+        for :func:`check_data_by` (which raises without it when the ruleset
+        has reference rules).  Rules that fail to compile or analyse commit
+        error rows (pass=0, fail=tests), as in ``check_data``.
 
         Safe to re-invoke with the same run_id after a crash: completed
         partitions are skipped (anti-join), partially-written output is
@@ -100,7 +107,7 @@ class ValidationLedger:
             "left_semi",
         )
         t0 = time.perf_counter()
-        rows = check_data_by(scoped, rules, by=part_col).collect()
+        rows = check_data_by(scoped, rules, by=part_col, datasets=datasets).collect()
         wall = max(time.perf_counter() - t0, 1e-9)
         # data rows per partition = max(tests) across that partition's rules
         # (robust to error rows with tests>0/pass=0 and to rules that test
@@ -137,6 +144,7 @@ class ValidationLedger:
         rules: Ruleset | Rule,
         run_id: str,
         file_col: str = "_ingest_file",
+        datasets: Mapping[str, DataFrame] | None = None,
     ) -> str:
         """Validate only files ADDED since the last invocation with this
         ``run_id`` — the daily-ingest pattern: a corpus directory grows by
@@ -169,7 +177,7 @@ class ValidationLedger:
         from .check import stamp_file_col
 
         scoped = stamp_file_col(df, file_col, basename=False, caller="run_incremental")
-        return self.run(scoped, rules, part_col=file_col, run_id=run_id)
+        return self.run(scoped, rules, part_col=file_col, run_id=run_id, datasets=datasets)
 
     def results(self, run_id: str) -> DataFrame:
         """Per-(partition, rule) rows, deduped to the latest commit."""

@@ -15,50 +15,72 @@ standard public Spark conf:
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import SparkSession
 
 __all__ = ["build_spark"]
 
 
-_MEM_UNITS = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
+_MEM_UNITS = {"b": 1, "k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4, "p": 1024**5}
 
 
 def _mem_to_bytes(mem: str) -> int | None:
-    """Spark heap string ("48g", "512m", bare bytes) → bytes; None if it
-    doesn't parse (then the caller skips the -Xms injection entirely)."""
-    s = mem.strip().lower().removesuffix("b")
-    unit = 1
-    if s and s[-1] in _MEM_UNITS:
-        unit = _MEM_UNITS[s[-1]]
-        s = s[:-1]
-    try:
-        return int(s) * unit
-    except ValueError:
+    """Spark memory string → bytes, read the way Spark reads
+    ``spark.driver.memory``: an integer with an optional ``b``/``k``/``m``/
+    ``g``/``t``/``p`` unit, ``kb``…``pb`` spellings allowed, and a bare
+    number in MiB ("1024" is 1 GiB).  None if it does not parse (then the
+    caller skips the -Xms injection entirely)."""
+    m = re.fullmatch(r"(\d+)([kmgtp]?)(b?)", mem.strip().lower())
+    if m is None:
         return None
+    n, unit, b = m.groups()
+    return int(n) * _MEM_UNITS[unit or (b or "m")]
 
 
-def _pretouch_fits_ram(driver_mem: str, max_fraction: float = 0.75) -> bool:
+def _pretouch_fits_ram(
+    driver_mem: str, max_fraction: float = 0.75, meminfo: str = "/proc/meminfo"
+) -> bool:
     """An -Xms heap is COMMITTED and touched at startup: requesting more
-    than physical RAM would OOM a JVM that plain -Xmx would let boot.  Only
-    inject when the request parses and fits comfortably; if /proc/meminfo
-    is unavailable (non-Linux), trust the caller's sizing."""
+    than the memory the host can give now would OOM a JVM that plain -Xmx
+    would let boot.  Only inject when the request parses and fits
+    comfortably in MemAvailable (not MemTotal: other resident processes
+    count); if /proc/meminfo is unavailable (non-Linux), trust the caller's
+    sizing."""
     req = _mem_to_bytes(driver_mem)
     if req is None:
         return False
     try:
-        with open("/proc/meminfo") as f:
-            total_kb = int(f.readline().split()[1])
-    except (OSError, ValueError, IndexError):
+        with open(meminfo) as f:
+            avail_kb = next(int(ln.split()[1]) for ln in f if ln.startswith("MemAvailable:"))
+    except (OSError, ValueError, IndexError, StopIteration):
         return True
-    return req <= total_kb * 1024 * max_fraction
+    return req <= avail_kb * 1024 * max_fraction
 
 
 def _driver_java_options(driver_mem: str, caller_opts: str = "") -> str:
-    """Heap pre-touch options for a sized driver heap, with any
-    caller-supplied options appended AFTER so their -Xms/-XX flags win
-    (the JVM honors the last occurrence of a repeated flag)."""
-    pretouch = f"-Xms{driver_mem} -XX:+AlwaysPreTouch"
+    """Heap pre-touch options for a sized driver heap — ``-Xms`` in whole
+    MiB, since the JVM reads neither Spark's ``gb`` spellings nor its MiB
+    default for a bare number — with any caller-supplied options appended
+    AFTER so their -Xms/-XX flags win (the JVM honors the last occurrence
+    of a repeated flag).  A size that does not parse emits no flag."""
+    mib = (_mem_to_bytes(driver_mem) or 0) // 1024**2
+    pretouch = f"-Xms{mib}m -XX:+AlwaysPreTouch" if mib else ""
     return f"{pretouch} {caller_opts}".strip()
+
+
+def _session_confs(confs: dict[str, str]) -> dict[str, str]:
+    """``build_spark``'s keyword confs (``spark_driver_memory=...``) as Spark
+    conf keys, with the heap pre-touch options injected into
+    ``spark.driver.extraJavaOptions`` when the caller sizes the driver heap
+    and it fits (see :func:`_pretouch_fits_ram`)."""
+    confs = dict(confs)
+    driver_mem = confs.get("spark_driver_memory")
+    if driver_mem and _pretouch_fits_ram(driver_mem):
+        opts = _driver_java_options(driver_mem, confs.pop("spark_driver_extraJavaOptions", ""))
+        if opts:
+            confs["spark_driver_extraJavaOptions"] = opts
+    return {k.replace("_", "."): v for k, v in confs.items()}
 
 
 def build_spark(
@@ -90,11 +112,6 @@ def build_spark(
     # spark.driver.extraJavaOptions is appended after, so its -Xms wins.
     # Cluster deployments should mirror this on executors
     # (spark.executor.extraJavaOptions).
-    driver_mem = extra_confs.get("spark_driver_memory")
-    if driver_mem and _pretouch_fits_ram(driver_mem):
-        extra_confs["spark_driver_extraJavaOptions"] = _driver_java_options(
-            driver_mem, extra_confs.pop("spark_driver_extraJavaOptions", "")
-        )
-    for k, v in extra_confs.items():
-        b = b.config(k.replace("_", "."), v)
+    for k, v in _session_confs(extra_confs).items():
+        b = b.config(k, v)
     return b.getOrCreate()

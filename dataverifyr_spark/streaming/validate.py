@@ -3,10 +3,15 @@ unbounded inputs.
 
 The reference is strictly batch (SURVEY.md §2.5), so this is a graft
 extension: a training-data ingest pipeline validates clips AS THEY ARRIVE and
-alerts on quality regressions per event-time window.  Rules compile to the
-identical Column predicates as the batch path, so semantics (NULL→fail,
-negate-then-guard) carry over verbatim; the fused conditional-sum aggregation
-becomes a (windowed) streaming aggregation with watermark-bounded state.
+alerts on quality regressions per event-time window.  Every validator here is
+a thin layer over the batch rule-evaluation core in ``check.py``: the same
+rule split, compile probe (an uncompilable rule becomes an error row, pass=0,
+fail=tests), conditional-sum aggregate and long-form unpivot.  So
+semantics (NULL→fail, negate-then-guard) carry over verbatim; only the
+grouping changes — the fused aggregate becomes a (windowed) streaming
+aggregation with watermark-bounded state.  Reference and uniqueness rules
+need a static lookup side or the whole key set, so every streaming entry
+point rejects them with the same ``ValueError``.
 
 Shapes:
 - ``check_stream``: declarative — streaming DataFrame in, streaming
@@ -25,8 +30,17 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..check import compile_rule_predicate
-from ..rules import ReferenceRule, Rule, Ruleset, UniquenessRule, ruleset
+from ..check import (
+    _compile_all,
+    _Compiled,
+    _count_aggs,
+    _hit,
+    _long_form,
+    _no_pass,
+    _pass_columns,
+    _split_rules,
+)
+from ..rules import Rule, Ruleset, ruleset
 
 __all__ = [
     "check_stream",
@@ -55,22 +69,24 @@ def _parse_duration_s(s: str) -> float:
     return float(parts[0]) * _DUR_UNITS[parts[1].lower()]
 
 
-def _rule_aggs(rules: Ruleset) -> tuple[list[Column], list[Rule]]:
-    aggs: list[Column] = [F.count(F.lit(1)).alias("__tests")]
-    good: list[Rule] = []
-    for r in rules:
-        if isinstance(r, ReferenceRule):
-            raise ValueError("reference rules need a static lookup side; use foreachBatch")
-        if isinstance(r, UniquenessRule):
-            raise ValueError(
-                "uniqueness rules are aggregation rules; not supported in streaming"
-            )
-        pred = compile_rule_predicate(r).column
-        aggs.append(
-            F.sum(F.when(pred, F.lit(1)).otherwise(F.lit(0))).alias(f"__p{len(good)}")
-        )
-        good.append(r)
-    return aggs, good
+def _stream_rules(sdf: DataFrame, rules: Ruleset | Rule) -> list[_Compiled]:
+    """The core's rule split + compile probe for a stream; reference and
+    uniqueness rules are rejected the same way on every streaming path."""
+    if isinstance(rules, Rule):
+        rules = ruleset(rules)
+    expr_rules, ref_rules, uniq_rules = _split_rules(rules)
+    if ref_rules:
+        raise ValueError("reference rules need a static lookup side; use foreachBatch")
+    if uniq_rules:
+        raise ValueError("uniqueness rules are aggregation rules; not supported in streaming")
+    return _compile_all(sdf, expr_rules)
+
+
+def _window_keys(window_col: str) -> list[Column]:
+    return [
+        F.col(f"{window_col}.start").alias("window_start"),
+        F.col(f"{window_col}.end").alias("window_end"),
+    ]
 
 
 def check_stream(
@@ -87,29 +103,13 @@ def check_stream(
     input row); late data beyond ``watermark`` is dropped and closed windows
     emit finalized counts in append mode.
     """
-    if isinstance(rules, Rule):
-        rules = ruleset(rules)
-    aggs, good = _rule_aggs(rules)
+    compiled = _stream_rules(sdf, rules)
     grouped = (
         sdf.withWatermark(time_col, watermark)
         .groupBy(F.window(F.col(time_col), window).alias("window"))
-        .agg(*aggs)
+        .agg(*_count_aggs(compiled))
     )
-    structs = [
-        F.struct(
-            F.lit(r.name).alias("name"),
-            F.lit(r.expr).alias("expr"),
-            F.col("__tests").alias("tests"),
-            F.col(f"__p{i}").alias("pass"),
-            (F.col("__tests") - F.col(f"__p{i}")).alias("fail"),
-        )
-        for i, r in enumerate(good)
-    ]
-    return grouped.select(
-        F.col("window.start").alias("window_start"),
-        F.col("window.end").alias("window_end"),
-        F.explode(F.array(*structs)).alias("__r"),
-    ).select("window_start", "window_end", "__r.name", "__r.expr", "__r.tests", "__r.pass", "__r.fail")
+    return _long_form(grouped, _window_keys("window"), _pass_columns(compiled))
 
 
 def validate_stream_to_ledger(
@@ -206,9 +206,7 @@ def validate_stream_windowed_to_sink(
     delay_s = _parse_duration_s(watermark)
     _parse_duration_s(window)  # validate early; F.window parses it per-row
 
-    if isinstance(rules, Rule):
-        rules = ruleset(rules)
-    aggs, good = _rule_aggs(rules)
+    compiled = _stream_rules(sdf, rules)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
@@ -224,38 +222,13 @@ def validate_stream_windowed_to_sink(
         )
         tagged = tagged.withColumn("__late", late_pred)
 
-        ontime = tagged.filter(~F.col("__late")).groupBy("__w").agg(*aggs)
-        structs = [
-            F.struct(
-                F.lit(r.name).alias("name"),
-                F.lit(r.expr).alias("expr"),
-                F.col("__tests").alias("tests"),
-                F.col(f"__p{i}").alias("pass"),
-                (F.col("__tests") - F.col(f"__p{i}")).alias("fail"),
-            )
-            for i, r in enumerate(good)
-        ]
-        rule_rows = ontime.select(
-            F.col("__w.start").alias("window_start"),
-            F.col("__w.end").alias("window_end"),
-            F.explode(F.array(*structs)).alias("__r"),
-        ).select(
-            "window_start", "window_end",
-            "__r.name", "__r.expr", "__r.tests", "__r.pass", "__r.fail",
-        )
-        late_rows = (
-            tagged.filter(F.col("__late"))
-            .groupBy("__w")
-            .agg(F.count(F.lit(1)).alias("tests"))
-            .select(
-                F.col("__w.start").alias("window_start"),
-                F.col("__w.end").alias("window_end"),
-                F.lit("_dropped_by_watermark").alias("name"),
-                F.lit(f"late > {watermark}").alias("expr"),
-                F.col("tests"),
-                F.lit(0).cast("long").alias("pass"),
-                F.col("tests").alias("fail"),
-            )
+        ontime = tagged.filter(~F.col("__late")).groupBy("__w").agg(*_count_aggs(compiled))
+        rule_rows = _long_form(ontime, _window_keys("__w"), _pass_columns(compiled))
+        late = tagged.filter(F.col("__late")).groupBy("__w").agg(*_count_aggs([]))
+        late_rows = _long_form(
+            late,
+            _window_keys("__w"),
+            [("_dropped_by_watermark", f"late > {watermark}", _no_pass())],
         )
         out = rule_rows.unionByName(late_rows).withColumn("batch", F.lit(batch_id))
         out.write.mode("overwrite").parquet(f"{sink_path}/summary/b{batch_id}")
@@ -321,8 +294,7 @@ def check_stream_against(
     one becomes a shuffled join per batch — for 10^12-row reference tables
     prefer the foreachBatch ledger path with a bucketed/pre-partitioned
     join.  Rules may reference columns from either side; the usual
-    streaming limits apply (no reference/uniqueness rules — _rule_aggs
-    raises)."""
+    streaming limits apply (no reference/uniqueness rules — they raise)."""
     joined = sdf.join(static_df, on=on, how="left")
     return check_stream(joined, rules, time_col, window=window, watermark=watermark)
 
@@ -348,20 +320,19 @@ def check_stream_cumulative(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    if isinstance(rules, Rule):
-        rules = ruleset(rules)
-    good = [r for r in rules if not isinstance(r, ReferenceRule)]
-    if len(good) != len(list(rules)):
-        raise ValueError("reference rules need a static lookup side; use foreachBatch")
-    preds = [compile_rule_predicate(r).column for r in good]
+    compiled = _stream_rules(sdf, rules)
+    # an error rule's flag is constant 0: pass=0, fail=tests, as in batch
     flags = sdf.select(
         F.col(by),
-        *[F.when(p, F.lit(1)).otherwise(F.lit(0)).alias(f"__f{i}") for i, p in enumerate(preds)],
+        *[
+            (F.lit(0) if c.pred is None else _hit(c.pred)).alias(f"__f{i}")
+            for i, c in enumerate(compiled)
+        ],
     )
 
-    names = [r.name for r in good]
-    exprs = [r.expr for r in good]
-    n = len(good)
+    names = [c.rule.name for c in compiled]
+    exprs = [c.rule.expr for c in compiled]
+    n = len(compiled)
     key_field = sdf.schema[by]
     key_ddl = f"{by} {key_field.dataType.simpleString()}"
     out_schema = f"{key_ddl}, name string, expr string, tests bigint, pass bigint, fail bigint"

@@ -67,6 +67,7 @@ def main(argv: list[str] | None = None) -> int:
     violations = filter_fails(rules, df, tag=True)
     write_violations(violations, f"{args.out}/violations", run_id=run_id)
 
+    refs = {k: v for k, v in datasets.items() if k != "data"}
     if args.by_file:
         # shard-level lineage: one row per (source file x rule) — joins
         # against the ingest manifest to locate the bad shard.  Runs on the
@@ -74,14 +75,13 @@ def main(argv: list[str] | None = None) -> int:
         # probe is a projection, so input_file_name() still resolves.
         from dataverifyr_spark import check_data_by_file
 
-        refs = {k: v for k, v in datasets.items() if k != "data"}
         per_file = check_data_by_file(df, rules, datasets=refs or None)
         write_summary(per_file, f"{args.out}/summary_by_file", run_id=run_id)
 
     if args.part_col:
         ledger = ValidationLedger(spark, f"{args.out}/ledger")
         n_before = ledger.pending_partitions(df, args.part_col, run_id).count()
-        ledger.run(df, rules, args.part_col, run_id=run_id)
+        ledger.run(df, rules, args.part_col, run_id=run_id, datasets=refs or None)
         print(
             f"ledger: validated {n_before} pending partition(s) this submit"
             + (" (resume: all partitions already committed)" if n_before == 0 else "")

@@ -42,14 +42,6 @@ class TestAliasCollisions:
         assert sorted(r["k"] for r in out) == [2, 2]
 
 
-class TestStreamingUniquenessGuard:
-    def test_rule_aggs_rejects_uniqueness_rule(self):
-        from dataverifyr_spark.streaming.validate import _rule_aggs
-
-        with pytest.raises(ValueError, match="aggregation rules"):
-            _rule_aggs(ruleset(unique_rule("clip_id", name="pk")))
-
-
 class TestCommaUniqueCols:
     def test_write_rules_rejects_comma_column(self, tmp_path):
         rs = ruleset(unique_rule("a,b", name="bad"))

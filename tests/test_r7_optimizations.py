@@ -218,33 +218,57 @@ class TestSessionHeapPretouch:
     def test_pretouch_options_from_driver_memory(self):
         from dataverifyr_spark.session import _driver_java_options
 
-        assert _driver_java_options("48g") == "-Xms48g -XX:+AlwaysPreTouch"
+        # -Xms in whole MiB: the JVM reads neither "2gb" nor a bare MiB count
+        assert _driver_java_options("48g") == "-Xms49152m -XX:+AlwaysPreTouch"
+        assert _driver_java_options("2gb") == "-Xms2048m -XX:+AlwaysPreTouch"
+        assert _driver_java_options("1024") == "-Xms1024m -XX:+AlwaysPreTouch"
+        assert _driver_java_options("1.5g") == ""  # unparseable -> no flag
+        assert _driver_java_options("huge", "-Dx=1") == "-Dx=1"
 
     def test_caller_options_appended_after_so_they_win(self):
         from dataverifyr_spark.session import _driver_java_options
 
         out = _driver_java_options("48g", "-Xms8g -XX:MaxMetaspaceSize=1g")
-        assert out.startswith("-Xms48g -XX:+AlwaysPreTouch")
+        assert out.startswith("-Xms49152m -XX:+AlwaysPreTouch")
         # JVM takes the LAST -Xms, so the caller's 8g overrides
         assert out.endswith("-Xms8g -XX:MaxMetaspaceSize=1g")
 
-    def test_no_driver_memory_no_injection(self):
-        import inspect
+    def test_session_confs_inject_only_for_sized_heap(self):
+        from dataverifyr_spark.session import _session_confs
 
-        from dataverifyr_spark.session import build_spark
-
-        # the injection is keyed on spark_driver_memory only; a plain
-        # build_spark() call path must not reference extraJavaOptions
-        src = inspect.getsource(build_spark)
-        assert 'extra_confs.get("spark_driver_memory")' in src
+        # no driver memory: confs pass through, nothing injected
+        assert _session_confs({"spark_ui_enabled": "false"}) == {"spark.ui.enabled": "false"}
+        sized = _session_confs({"spark_driver_memory": "1g", "spark_ui_enabled": "false"})
+        assert sized["spark.driver.memory"] == "1g"
+        assert sized["spark.driver.extraJavaOptions"] == "-Xms1024m -XX:+AlwaysPreTouch"
+        # unparseable size: no injection, the caller's options kept as given
+        bad = _session_confs(
+            {"spark_driver_memory": "huge", "spark_driver_extraJavaOptions": "-Dx=1"}
+        )
+        assert bad["spark.driver.extraJavaOptions"] == "-Dx=1"
 
     def test_mem_parse_and_ram_guard(self):
         from dataverifyr_spark.session import _mem_to_bytes, _pretouch_fits_ram
 
         assert _mem_to_bytes("48g") == 48 * 1024**3
         assert _mem_to_bytes("512M") == 512 * 1024**2
-        assert _mem_to_bytes("1024") == 1024
+        assert _mem_to_bytes("2gb") == 2 * 1024**3
+        assert _mem_to_bytes("1024") == 1024 * 1024**2  # bare number: MiB, as Spark reads it
+        assert _mem_to_bytes("512b") == 512
         assert _mem_to_bytes("1.5g") is None  # unparseable -> no injection
         assert _pretouch_fits_ram("1g")       # 1g fits any CI box
         assert not _pretouch_fits_ram("huge") # unparseable -> refuse
         assert not _pretouch_fits_ram("1073741824t")  # > RAM -> refuse
+
+    def test_ram_guard_reads_mem_available(self, tmp_path):
+        from dataverifyr_spark.session import _pretouch_fits_ram
+
+        # 64 GiB installed but only 2 GiB free: a 4g pre-touched heap must
+        # not be injected, a 1g one may
+        info = tmp_path / "meminfo"
+        info.write_text(
+            "MemTotal:       67108864 kB\nMemFree:         1048576 kB\n"
+            "MemAvailable:    2097152 kB\n"
+        )
+        assert not _pretouch_fits_ram("4g", meminfo=str(info))
+        assert _pretouch_fits_ram("1g", meminfo=str(info))

@@ -1,14 +1,26 @@
-import sys, io, contextlib
-sys.path.insert(0, __file__.rsplit("/tools/",1)[0])
+"""Regenerate EXPLAIN.md: physical-plan snapshots of the engine's operators.
+
+    python tools/gen_explain.py [SF_DIR]
+
+SF_DIR holds the TPC-H-shaped parquet fixtures (default: ``testdata/sf0.01``
+next to the checkout).  The check, reference and uniqueness sections are
+built by the rule-evaluation core itself (``check._evaluate``), so they show
+the plans the engine runs.  The "(r6 ...)" sections at the end of EXPLAIN.md
+are not built here: the file is rewritten without them, so splice them back
+when regenerating.
+"""
+import sys, io, contextlib, os
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 from pyspark.sql import functions as F
 from dataverifyr_spark.session import build_spark
 import dataverifyr_spark as dv
-from dataverifyr_spark.check import compile_rule_predicate
+from dataverifyr_spark.check import _evaluate
 from dataverifyr_spark.operators.similarity import brute_force_topk
 
 spark = build_spark(master="local[8]", shuffle_partitions=8, spark_ui_enabled="false")
 spark.sparkContext.setLogLevel("ERROR")
-sf="/root/testdata/sf0.01"
+sf = sys.argv[1] if len(sys.argv) > 1 else os.path.join(os.path.dirname(REPO), "testdata", "sf0.01")
 li = spark.read.parquet(f"{sf}/lineitem.parquet")
 cust = spark.read.parquet(f"{sf}/customer.parquet")
 ords = spark.read.parquet(f"{sf}/orders.parquet")
@@ -25,19 +37,15 @@ rules = dv.ruleset(
     dv.rule("l_returnflag %in% c('A','N')"),
     dv.rule("l_extendedprice > 1000", allow_na=True),
 )
-preds = [compile_rule_predicate(r).column for r in rules]
-aggs = [F.count(F.lit(1)).alias("tests")] + [F.sum(F.when(p,1).otherwise(0)).alias(f"p{i}") for i,p in enumerate(preds)]
 sections = []
-sections.append(("Fused 3-rule check (one scan, pruned ReadSchema, partial aggregation)", cap(li.agg(*aggs))))
+sections.append(("Fused 3-rule check (one scan, pruned ReadSchema, partial aggregation)", cap(_evaluate(li, rules).main)))
 
 viol = dv.filter_fails(rules, li, tag=True)
 sections.append(("Tagged violations (single scan, array+explode, no per-rule scans)", cap(viol)))
 
-ref_vals = cust.select(F.col("c_custkey").alias("__ref_val")).distinct()
-local = ords.select("o_custkey")
-joined = local.join(ref_vals, local["o_custkey"]==F.col("__ref_val"), "left")
-refagg = joined.agg(F.sum(F.when(F.col("__ref_val").isNotNull(),1).otherwise(0)).alias("p"))
-sections.append(("Reference-rule membership count (key-only projection before join; AQE broadcast)", cap(refagg)))
+fk = dv.ruleset(dv.reference_rule("o_custkey", "customer", "c_custkey"))
+_, refagg, _ = _evaluate(ords, fk, datasets={"customer": cust}).side[0]
+sections.append(("Reference-rule membership count (key-only (value, count) pre-aggregate before the join; AQE broadcast)", cap(refagg)))
 
 qvec=[float(v) for v in emb.select("embedding").head()[0]]
 sections.append(("Cosine top-k (TakeOrderedAndProject - per-partition top-k merge, no sort shuffle)", cap(brute_force_topk(emb, qvec, 10))))
@@ -66,8 +74,7 @@ audio_rules = dv.ruleset(
     dv.rule("audio_rms(bytes) > 0.001", allow_na=True),
     dv.rule("audio_n_samples(bytes) > 0"),
 )
-apreds = [compile_rule_predicate(r).column for r in audio_rules]
-aplan = cap(clips.agg(*[F.sum(F.when(p,1).otherwise(0)).alias(f"p{i}") for i,p in enumerate(apreds)]))
+aplan = cap(_evaluate(clips, audio_rules).main)
 assert aplan.count("ArrowEvalPython") == 2  # tree + detail of ONE node
 sections.append(("Audio dialect 5-rule fused check (ONE shared decode probe -> one ArrowEvalPython)", aplan))
 
@@ -97,8 +104,7 @@ sections.append((
 from dataverifyr_spark.audio import audio_ruleset, expected_table, with_audio_features_vs
 exp = expected_table(spark, 50)
 feats = with_audio_features_vs(clips, exp, broadcast_expected=True)
-vpreds = [compile_rule_predicate(r).column for r in audio_ruleset()]
-vplan = cap(feats.agg(*[F.sum(F.when(p,1).otherwise(0)).alias(f"p{i}") for i,p in enumerate(vpreds)]))
+vplan = cap(_evaluate(feats, audio_ruleset()).main)
 assert vplan.count("ArrowEvalPython") == 2  # tree + detail of ONE node
 assert "BroadcastNestedLoopJoin" not in vplan, vplan
 assert "BroadcastHashJoin" in vplan, vplan
@@ -116,8 +122,7 @@ from dataverifyr_spark.operators.h264 import h264_videos_table
 from dataverifyr_spark.operators.image import video_probe
 h264 = h264_videos_table(spark, 50)
 h264_rules = dv.ruleset(dv.rule("vid_valid"), dv.rule("vid_n_idr >= 2", allow_na=True))
-hpreds = [compile_rule_predicate(r).column for r in h264_rules]
-hplan = cap(video_probe(h264).agg(*[F.sum(F.when(p,1).otherwise(0)).alias(f"p{i}") for i,p in enumerate(hpreds)]))
+hplan = cap(_evaluate(video_probe(h264), h264_rules).main)
 assert hplan.count("MapInPandas") == 2  # tree + detail of ONE Arrow-batched node
 sections.append(("H.264 container-probe fused check (one NAL-walk MapInPandas, zero pixel decode)", hplan))
 
@@ -134,15 +139,7 @@ pq_tree = pq_plan.split("\n\n(1)")[0] + (
 )
 sections.append(("PQ ADC top-k (codes + literal LUT only — no vector math in the scan, per-partition top-k merge)", pq_tree))
 
-with open("/root/repo/EXPLAIN.md","w") as f:
-    f.write("# EXPLAIN — physical plan snapshots (generated from sf0.01, `tools/gen_explain.py`)\n\n")
-    f.write("Evidence that each operator compiles to the intended plan shape; regenerate\nwith `python tools/gen_explain.py`.\n")
-    for title, plan in sections:
-        f.write(f"\n## {title}\n\n```\n{plan}\n```\n")
-print("written")
-
-# ---- round 5 additions (appended after the file write above ran once; we
-# rebuild sections and rewrite below) ----
+# ---- round 5 additions ----
 
 # keyed most_frequent: stats agg + WindowGroupLimit top-k side broadcast-joined
 mf = dv.describe_by(cust.select("c_mktsegment","c_nationkey"), by="c_mktsegment", approx=True, top_n=3)
@@ -151,9 +148,8 @@ assert "WindowGroupLimit" in mfplan and "Expand" not in mfplan, mfplan
 sections.append(("describe_by keyed most_frequent (approx: no Expand; WindowGroupLimit pre-limits top-n before the shuffle; tiny mf side broadcast-joins)", mfplan))
 
 # uniqueness (PK) rule: key-only projection -> two-level hash aggregate
-from dataverifyr_spark.check import _eval_uniqueness  # plan shape via the same exprs
-uniq_grouped = li.groupBy("l_orderkey").agg(F.count(F.lit(1)).alias("__cnt"))
-uplan = cap(uniq_grouped.agg(F.sum(F.when(F.col("__cnt")==1, F.col("__cnt")).otherwise(0)).alias("p")))
+_, uniq_plan, _ = _evaluate(li, dv.ruleset(dv.unique_rule("l_orderkey"))).side[0]
+uplan = cap(uniq_plan)
 assert "ReadSchema: struct<l_orderkey" in uplan, uplan  # payload pruned to the key
 sections.append(("Uniqueness (PK) rule (key-only ReadSchema; partial-agg groupBy count -> single-row reduce)", uplan))
 
@@ -185,14 +181,13 @@ assert "Exchange" not in cplan and "Python" not in cplan, cplan
 sections.append(("Document chunking (sequence/slice explode — scan-speed, zero shuffle, zero Python)", cplan))
 
 # vector dialect rule inside the fused check scan: one agg, no Python
-vec_pred = compile_rule_predicate(dv.rule("vec_dim(embedding) == 64 & vec_norm(embedding) > 0.001")).column
-vplan2 = cap(emb.agg(F.sum(F.when(vec_pred, 1).otherwise(0))))
+vplan2 = cap(_evaluate(emb, dv.ruleset(dv.rule("vec_dim(embedding) == 64 & vec_norm(embedding) > 0.001"))).main)
 assert "Python" not in vplan2, vplan2
 sections.append(("Vector (embedding) dialect rule in the fused agg (aggregate/exists folds — JVM-side, single scan)", vplan2))
 
-with open("/root/repo/EXPLAIN.md","w") as f:
+with open(os.path.join(REPO, "EXPLAIN.md"), "w") as f:
     f.write("# EXPLAIN — physical plan snapshots (generated from sf0.01, `tools/gen_explain.py`)\n\n")
     f.write("Evidence that each operator compiles to the intended plan shape; regenerate\nwith `python tools/gen_explain.py`.\n")
     for title, plan in sections:
         f.write(f"\n## {title}\n\n```\n{plan}\n```\n")
-print("rewritten with r5 sections")
+print("written")

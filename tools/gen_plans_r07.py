@@ -107,11 +107,13 @@ both.unpersist()
 
 # -- 4. reference-rule membership count --------------------------------------
 import dataverifyr_spark as dv  # noqa: E402
-from dataverifyr_spark.check import _reference_ok_column  # noqa: E402
+from dataverifyr_spark import check as _check  # noqa: E402
 
 r = dv.reference_rule("o_custkey", "customer", "c_custkey")
-res = _reference_ok_column(ords, r, {"customer": cust})
-if len(res) == 3:  # r7 returns (joined, ok, count-alias)
+if hasattr(_check, "_evaluate"):  # one rule-evaluation core: the rule's own plan
+    agg = _check._evaluate(ords, dv.ruleset(r), datasets={"customer": cust}).side[0][1]
+elif len(res := _check._reference_ok_column(ords, r, {"customer": cust})) == 3:
+    # r7 returns (joined, ok, count-alias)
     joined, ok, cnt = res
     agg = joined.agg(F.sum(F.when(ok, F.col(cnt)).otherwise(F.lit(0))).alias("p"))
 else:  # r6 returned (joined, ok) over row-level rows
